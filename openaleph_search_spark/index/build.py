@@ -7,15 +7,20 @@ drives it, Lucene executes it).  Pipeline:
 
   docs(repo, path, commit, lang, content)
     │  F.sha2(content) / deterministic src_part (JVM-side)
-    ├─ groupBy(src_part).applyInPandas(SPIMI)          ── scatter
-    │     tokenize (vectorized analyzer) → per-partition PACKED posting
-    │     blocks (≤128 docs, delta+varint docs/tfs/dls/positions)
+    ├─ repartitionById(T, src_part)                    ── scatter
+    │     source partition p → task p mod T, directly (no hash
+    │     placement, no AQE coalescing: every core gets its share)
+    ├─ groupBy(src_part).applyInPandas(SPIMI)          ── no 2nd shuffle
+    │     tokenize (vectorized analyzer) → int term codes → one
+    │     (term, doc, position) sort → per-partition PACKED posting
+    │     blocks (≤128 docs, delta+varint docs/tfs/dls/positions, each
+    │     payload one varint pass sliced into an Arrow binary column)
     │     write postings/shard=K/part=N.parquet (term-sorted, the
     │     final layout — shard = src_part mod S is constant per task)
-    │     + doc_meta/part=N.parquet
+    │     + doc_meta/part=N.parquet + term_stats_parts/part=N.parquet
     │     commit manifest/part=N.json   ← per-partition checkpoint
-    ├─ global_stats (N, avgdl) from doc_meta           ── tiny agg
-    └─ term_stats from a map-side-combined sum over block rows
+    ├─ global_stats (N, avgdl) from the manifests      ── driver-side
+    └─ term_stats: sum of the per-partition term-stat partials
 
 Scale properties (designed for 1000-executor / 100 TB):
 
@@ -46,11 +51,14 @@ import time
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..analysis.analyzer import tokenize_flat
 from .codec import (BLOCK_SIZE, K1, B, delta_restarting,
-                    encode_positions_grouped, varint_encode_sliced)
+                    varint_binary_array)
 from .storage import IndexStorage
 
 DOC_ID_PART_SHIFT = 33  # doc_id = (src_part << 33) | local_row
@@ -64,15 +72,26 @@ DOC_META_SCHEMA = ("doc_id long, repo string, path string, commit string, "
                    "lang string, content_sha256 string, doc_len int, "
                    "src_part int")
 MANIFEST_SCHEMA = ("src_part int, status string, docs long, postings long, "
-                   "tokens long, seconds double, attempt int")
+                   "tokens long, seconds double, attempt int, task int")
 POSTINGS_SCHEMA = ("term string, shard int, first_doc long, "
                    "last_doc long, doc_count int, sum_tf long, max_tf int, "
                    "min_dl long, docs_payload binary, "
                    "tfs_payload binary, dls_payload binary, "
                    "pos_payload binary")
-_BLOCK_COLS = ["term", "shard", "first_doc", "last_doc", "doc_count",
-               "sum_tf", "max_tf", "min_dl", "docs_payload",
-               "tfs_payload", "dls_payload", "pos_payload"]
+# one SPIMI task's postings run: POSTINGS_SCHEMA minus ``shard``, which
+# the hive directory (shard=K) carries
+_POSTINGS_RUN_SCHEMA = pa.schema([
+    ("term", pa.string()),
+    ("first_doc", pa.int64()), ("last_doc", pa.int64()),
+    ("doc_count", pa.int32()), ("sum_tf", pa.int64()),
+    ("max_tf", pa.int32()), ("min_dl", pa.int64()),
+    ("docs_payload", pa.binary()), ("tfs_payload", pa.binary()),
+    ("dls_payload", pa.binary()), ("pos_payload", pa.binary()),
+])
+_TERM_STATS_SCHEMA = pa.schema([
+    ("term", pa.string()), ("df", pa.int64()), ("cf", pa.int64())])
+_FIELD_LENS_SCHEMA = pa.schema([
+    ("doc_id", pa.int64()), ("field", pa.string()), ("dl", pa.int32())])
 
 
 def _spimi_writer(storage: IndexStorage, with_positions: bool, attempt: int,
@@ -89,7 +108,6 @@ def _spimi_writer(storage: IndexStorage, with_positions: bool, attempt: int,
     passthrough columns stored in doc_meta (filter/sort/facet targets —
     the ES stored-field role for typed metadata like timestamps).
     """
-    import pyarrow as pa
     fields = fields or {}
     meta_cols = meta_cols or []
 
@@ -121,44 +139,43 @@ def _spimi_writer(storage: IndexStorage, with_positions: bool, attempt: int,
         doc_ids = (np.int64(src_part) << DOC_ID_PART_SHIFT) + np.arange(
             n, dtype=np.int64)
 
-        row_idx, terms, positions = tokenize_flat(pdf["content"])
-        content_dl = np.zeros(n, dtype=np.int32)
-        if row_idx.size:
-            np.maximum.at(content_dl, row_idx,
-                          (positions + 1).astype(np.int32))
         # All per-token work runs on INT CODES: each part (content,
         # fields, bigrams) factorizes locally, field prefixes attach to
-        # the (small) unique sets only, and one vocabulary argsort
-        # replaces the global per-token string factorize/concat — the
-        # string ops were the scatter pass's memory-bandwidth hot spot.
+        # the (small) unique sets only — held as Arrow string arrays, so
+        # prefixing, bigram joins and the one vocabulary sort run in C++
+        # — and no global per-token string factorize/concat happens.
+        # Each part's token strings are dropped as soon as they are coded.
+        row_parts, code_parts, pos_parts, uniq_parts = [], [], [], []
+        # per-field per-doc lengths (Lucene per-field norms); the avgdl
+        # denominator is ALL docs (our pinned convention, matching the
+        # golden oracles; Lucene divides by docs-with-field)
+        field_len_cols: list[tuple[str, np.ndarray]] = []
+
+        def add_part(name, rows, codes, uniq, pos):
+            dl = np.zeros(n, dtype=np.int32)
+            if rows.size:
+                np.maximum.at(dl, rows, (pos + 1).astype(np.int32))
+            offset = sum(len(u) for u in uniq_parts)
+            field_len_cols.append((name, dl))
+            row_parts.append(rows)
+            code_parts.append(codes + offset)
+            uniq_parts.append(uniq)
+            pos_parts.append(pos)
+
+        row_idx, terms, positions = tokenize_flat(pdf["content"])
         c_codes, c_uniq = pd.factorize(terms, sort=False)
-        c_uniq = np.asarray(c_uniq, dtype=object)
-        code_parts = [c_codes.astype(np.int64)]
-        uniq_parts = [c_uniq]
-        offset = len(c_uniq)
-        # per-token dl = its own field's length (Lucene per-field norms)
-        dl_tok_parts = [content_dl[row_idx]]
-        row_parts, pos_parts = [row_idx], [positions]
-        # avgdl denominator = ALL docs (our pinned convention, matching
-        # the golden oracles; Lucene divides by docs-with-field)
-        field_stats = {"content": (n, int(content_dl.sum()))}
-        field_len_cols: list[tuple[str, np.ndarray]] = [
-            ("content", content_dl)]
+        del terms
+        c_uniq = pa.array(np.asarray(c_uniq, dtype=object), pa.string())
+        add_part("content", row_idx, c_codes, c_uniq, positions)
         for fname, fcol in sorted(fields.items()):
             f_row, f_terms, f_pos = tokenize_flat(pdf[fcol])
-            f_dl = np.zeros(n, dtype=np.int32)
-            if f_row.size:
-                np.maximum.at(f_dl, f_row, (f_pos + 1).astype(np.int32))
             f_codes, f_uniq = pd.factorize(f_terms, sort=False)
-            row_parts.append(f_row)
-            code_parts.append(f_codes.astype(np.int64) + offset)
-            uniq_parts.append(np.array(
-                [f"{fname}{FIELD_SEP}{u}" for u in f_uniq], dtype=object))
-            offset += len(f_uniq)
-            pos_parts.append(f_pos)
-            dl_tok_parts.append(f_dl[f_row])
-            field_stats[fname] = (n, int(f_dl.sum()))
-            field_len_cols.append((fname, f_dl))
+            del f_terms
+            add_part(fname, f_row, f_codes, pc.binary_join_element_wise(
+                f"{fname}{FIELD_SEP}",
+                pa.array(np.asarray(f_uniq, dtype=object), pa.string()),
+                ""), f_pos)
+            del f_row, f_codes, f_pos
         if bigrams and row_idx.size:
             # T16 index_phrases: 2-gram shingles of content as their
             # own field (the phrase fast path; mapping.py:208).
@@ -170,111 +187,23 @@ def _spimi_writer(storage: IndexStorage, with_positions: bool, attempt: int,
             bi_key = (c_codes[:-1][adj].astype(np.int64) * V
                       + c_codes[1:][adj])
             bi_codes, bi_uniq_key = pd.factorize(bi_key, sort=False)
-            left = (np.asarray(bi_uniq_key) // V).astype(np.int64)
-            right = (np.asarray(bi_uniq_key) % V).astype(np.int64)
-            uniq_parts.append(np.array(
-                [f"{BIGRAM_FIELD}{FIELD_SEP}{c_uniq[a]} {c_uniq[b]}"
-                 for a, b in zip(left, right)], dtype=object))
-            bi_row = row_idx[:-1][adj]
-            bi_pos = positions[:-1][adj]
-            bi_dl = np.zeros(n, dtype=np.int32)
-            if bi_row.size:
-                np.maximum.at(bi_dl, bi_row, (bi_pos + 1).astype(np.int32))
-            row_parts.append(bi_row)
-            code_parts.append(bi_codes.astype(np.int64) + offset)
-            offset += len(bi_uniq_key)
-            pos_parts.append(bi_pos)
-            dl_tok_parts.append(bi_dl[bi_row])
-            field_stats[BIGRAM_FIELD] = (n, int(bi_dl.sum()))
-            field_len_cols.append((BIGRAM_FIELD, bi_dl))
-        row_idx = np.concatenate(row_parts)
-        positions = np.concatenate(pos_parts)
-        dl_tok = np.concatenate(dl_tok_parts).astype(np.int64)
+            left = c_uniq.take(np.asarray(bi_uniq_key) // V)
+            right = c_uniq.take(np.asarray(bi_uniq_key) % V)
+            add_part(BIGRAM_FIELD, row_idx[:-1][adj], bi_codes,
+                     pc.binary_join_element_wise(
+                         f"{BIGRAM_FIELD}{FIELD_SEP}",
+                         pc.binary_join_element_wise(left, right, " "),
+                         ""), positions[:-1][adj])
+            del adj, bi_key, bi_codes, left, right
+        del row_idx, positions, c_codes
+        content_dl = field_len_cols[0][1]
+        field_stats = {name: (n, int(dl.sum()))
+                       for name, dl in field_len_cols}
 
-        block_rows = 0
-        run = pd.DataFrame({c: [] for c in _BLOCK_COLS})
-        dl_per_doc = content_dl
-        if row_idx.size:
-            # one vocabulary-sized argsort gives the SAME sorted codes
-            # the old global pd.factorize(sort=True) produced (parts
-            # never share terms — field prefixes are distinct)
-            raw_codes = np.concatenate(code_parts)
-            uniq_all = np.concatenate(uniq_parts)
-            vorder = np.argsort(uniq_all)
-            rank = np.empty(vorder.size, dtype=np.int64)
-            rank[vorder] = np.arange(vorder.size, dtype=np.int64)
-            codes = rank[raw_codes]
-            uniq = uniq_all[vorder]
-            # (doc, term) aggregation: sort by (row, code, pos), run-length
-            order = np.lexsort((positions, codes, row_idx))
-            r = row_idx[order]
-            c = codes[order]
-            p = positions[order]
-            new_grp = np.empty(r.size, dtype=bool)
-            new_grp[0] = True
-            new_grp[1:] = (r[1:] != r[:-1]) | (c[1:] != c[:-1])
-            starts = np.flatnonzero(new_grp)
-            tfs = np.diff(np.append(starts, r.size)).astype(np.int64)
-            g_row = r[starts]
-            g_code = c[starts]
-            g_dl_all = dl_tok[order][starts]  # per-field length (norms)
-            pos_payloads = (
-                np.array(encode_positions_grouped(p, starts), dtype=object)
-                if with_positions else None)
-            # term-major resort → per-term posting slices (docs ascend)
-            order2 = np.lexsort((g_row, g_code))
-            g_code = g_code[order2]
-            g_doc = doc_ids[g_row[order2]]
-            g_tf = tfs[order2]
-            g_dl = g_dl_all[order2]
-            if pos_payloads is not None:
-                pos_payloads = pos_payloads[order2]
-            t_bounds = np.flatnonzero(
-                np.r_[True, g_code[1:] != g_code[:-1]])
-            t_ends = np.r_[t_bounds[1:], g_code.size]
-            uniq_arr = np.asarray(uniq, dtype=object)
-            # ALL terms' blocks in single vectorized passes (the old
-            # per-term encode_blocks loop spent ~60µs of call overhead
-            # per term): global block boundaries, one delta pass
-            # restarting at every block head, one varint pass per
-            # payload type sliced per block, reduceat for the stats
-            lens = t_ends - t_bounds
-            nblk = (lens + BLOCK_SIZE - 1) // BLOCK_SIZE
-            tot = int(nblk.sum())
-            term_of = np.repeat(np.arange(t_bounds.size), nblk)
-            base = np.repeat(np.cumsum(nblk) - nblk, nblk)
-            within = np.arange(tot, dtype=np.int64) - base
-            blk_lo = t_bounds[term_of] + within * BLOCK_SIZE
-            blk_hi = np.minimum(blk_lo + BLOCK_SIZE, t_ends[term_of])
-            g_doc_u = g_doc.astype(np.uint64)
-            g_tf_u = g_tf.astype(np.uint64)
-            docs_chunks = varint_encode_sliced(
-                delta_restarting(g_doc_u, blk_lo), blk_lo)
-            tfs_chunks = varint_encode_sliced(g_tf_u - np.uint64(1),
-                                              blk_lo)
-            dls_chunks = varint_encode_sliced(g_dl.astype(np.uint64),
-                                              blk_lo)
-            sums = np.add.reduceat(g_tf, blk_lo)
-            maxs = np.maximum.reduceat(g_tf, blk_lo)
-            mins_dl = np.minimum.reduceat(g_dl, blk_lo)
-            run = pd.DataFrame({
-                "term": uniq_arr[g_code[blk_lo]],
-                "shard": np.full(tot, shard, dtype=np.int32),
-                "first_doc": g_doc[blk_lo],
-                "last_doc": g_doc[blk_hi - 1],
-                "doc_count": (blk_hi - blk_lo).astype(np.int32),
-                "sum_tf": sums.astype(np.int64),
-                "max_tf": maxs.astype(np.int32),
-                "min_dl": mins_dl.astype(np.int64),
-                "docs_payload": docs_chunks,
-                "tfs_payload": tfs_chunks,
-                "dls_payload": dls_chunks,
-                "pos_payload": (
-                    [b"".join(pos_payloads[lo:hi])
-                     for lo, hi in zip(blk_lo, blk_hi)]
-                    if pos_payloads is not None else [b""] * tot),
-            }, columns=_BLOCK_COLS)
-            block_rows = tot  # truthy marker for the stats partial
+        run, ts = _pack_run(
+            row_parts, code_parts, pos_parts, uniq_parts,
+            np.stack([dl for _, dl in field_len_cols]), doc_ids,
+            with_positions)
 
         meta = pd.DataFrame({
             "doc_id": doc_ids,
@@ -283,7 +212,7 @@ def _spimi_writer(storage: IndexStorage, with_positions: bool, attempt: int,
             "commit": pdf["commit"],
             "lang": pdf["lang"],
             "content_sha256": pdf["content_sha256"],
-            "doc_len": dl_per_doc,
+            "doc_len": content_dl,
             "src_part": np.full(n, src_part, dtype=np.int32),
             **{c: pdf[c] for c in meta_cols},
         })
@@ -296,24 +225,11 @@ def _spimi_writer(storage: IndexStorage, with_positions: bool, attempt: int,
                   storage.field_lens_dir):
             storage.io.mkdirs(d)
         # the task writes its single-shard run STRAIGHT into the final
-        # hive layout (shard = src_part mod S is constant per task):
-        # term-sorted for rowgroup pruning, shard encoded in the dir
+        # hive layout (shard = src_part mod S is constant per task),
+        # (term, first_doc)-sorted by construction for rowgroup pruning
         # (LAYOUT v6 — no separate tf_runs spool + JVM re-layout job)
-        run = run.sort_values(["term", "first_doc"], kind="mergesort",
-                              ignore_index=True)
-        run_schema = pa.schema([
-            ("term", pa.string()),
-            ("first_doc", pa.int64()), ("last_doc", pa.int64()),
-            ("doc_count", pa.int32()), ("sum_tf", pa.int64()),
-            ("max_tf", pa.int32()), ("min_dl", pa.int64()),
-            ("docs_payload", pa.binary()), ("tfs_payload", pa.binary()),
-            ("dls_payload", pa.binary()), ("pos_payload", pa.binary()),
-        ])
         storage.io.write_parquet_atomic(
-            pa.Table.from_pandas(run.drop(columns=["shard"]),
-                                 schema=run_schema,
-                                 preserve_index=False),
-            os.path.join(shard_dir, f"part={src_part}.parquet"))
+            run, os.path.join(shard_dir, f"part={src_part}.parquet"))
         meta_tbl = pa.Table.from_pandas(meta, preserve_index=False)
         for i, fld in enumerate(meta_tbl.schema):
             # Spark cannot read nanosecond parquet timestamps — coerce
@@ -328,44 +244,22 @@ def _spimi_writer(storage: IndexStorage, with_positions: bool, attempt: int,
         # per-doc per-field lengths (long format, zero rows skipped):
         # compact() needs these to recompute exact per-field avgdl
         # after deletes (the json partials below are pre-delete sums)
-        fl_ids, fl_fields, fl_dls = [], [], []
-        for fname, dl_arr in field_len_cols:
-            nz = np.flatnonzero(dl_arr)
-            fl_ids.append(doc_ids[nz])
-            fl_fields.append(np.full(nz.size, fname, dtype=object))
-            fl_dls.append(dl_arr[nz])
-        fl = pd.DataFrame({
-            "doc_id": (np.concatenate(fl_ids) if fl_ids
-                       else np.empty(0, np.int64)),
-            "field": (np.concatenate(fl_fields) if fl_fields
-                      else np.empty(0, object)),
-            "dl": (np.concatenate(fl_dls).astype(np.int32) if fl_dls
-                   else np.empty(0, np.int32)),
-        })
+        nz = [np.flatnonzero(dl) for _, dl in field_len_cols]
         storage.io.write_parquet_atomic(
-            pa.Table.from_pandas(fl, preserve_index=False,
-                                 schema=pa.schema([
-                                     ("doc_id", pa.int64()),
-                                     ("field", pa.string()),
-                                     ("dl", pa.int32())])),
+            pa.table({
+                "doc_id": np.concatenate([doc_ids[i] for i in nz]),
+                "field": np.repeat([name for name, _ in field_len_cols],
+                                   [i.size for i in nz]).astype(object),
+                "dl": np.concatenate(
+                    [dl[i] for i, (_, dl) in zip(nz, field_len_cols)]),
+            }, schema=_FIELD_LENS_SCHEMA),
             os.path.join(storage.field_lens_dir,
                          f"part={src_part}.parquet"))
         # per-partition term-stat partials: the global term dictionary
         # aggregation then runs over tiny pre-combined rows
-        if block_rows:
-            ts = (run.groupby("term", sort=False)
-                  .agg(df=("doc_count", "sum"), cf=("sum_tf", "sum"))
-                  .reset_index())
-        else:
-            ts = pd.DataFrame({"term": [], "df": [], "cf": []})
         storage.io.write_parquet_atomic(
-            pa.Table.from_pandas(ts, preserve_index=False,
-                                 schema=pa.schema([
-                                     ("term", pa.string()),
-                                     ("df", pa.int64()),
-                                     ("cf", pa.int64())])),
-            os.path.join(storage.term_stats_parts_dir,
-                         f"part={src_part}.parquet"))
+            ts, os.path.join(storage.term_stats_parts_dir,
+                             f"part={src_part}.parquet"))
 
         # per-field (docs, tokens) partials → global per-field avgdl
         storage.io.write_bytes_atomic(
@@ -373,10 +267,12 @@ def _spimi_writer(storage: IndexStorage, with_positions: bool, attempt: int,
                          f"fields_part={src_part}.json"),
             json.dumps(field_stats).encode())
 
+        tc = TaskContext.get()
         row = {
             "src_part": src_part, "status": "done", "docs": n,
-            "postings": len(run), "tokens": int(dl_per_doc.sum()),
+            "postings": run.num_rows, "tokens": int(content_dl.sum()),
             "seconds": time.time() - t0, "attempt": attempt,
+            "task": tc.partitionId() if tc is not None else -1,
         }
         # JSON manifest written LAST = the atomic per-partition commit.
         storage.io.write_bytes_atomic(storage.manifest_path(src_part),
@@ -384,6 +280,168 @@ def _spimi_writer(storage: IndexStorage, with_positions: bool, attempt: int,
         return pd.DataFrame([row])
 
     return fn
+
+
+def _pack_run(row_parts: list, code_parts: list, pos_parts: list,
+              uniq_parts: list, field_dl: np.ndarray, doc_ids: np.ndarray,
+              with_positions: bool):
+    """One source partition's tokens → (postings run, term-stat
+    partial) as Arrow tables.
+
+    Part ``k`` (content, each field, bigrams) has tokens
+    ``row_parts[k]``/``code_parts[k]``/``pos_parts[k]``, term strings
+    ``uniq_parts[k]`` (codes index the concatenated vocabulary) and
+    per-row lengths ``field_dl[k]``. The token lists are merged into
+    int32 arrays and cleared, so every token-level array is freed as
+    soon as the next stage no longer needs it.
+
+    One (term, row, position) sort puts the tokens term-major with docs
+    ascending (doc ids are monotone in row), so every (doc, term) group,
+    every ≤BLOCK_SIZE block and every term is a contiguous slice of the
+    same flat arrays: each payload is ONE varint pass sliced per block
+    into an Arrow binary column, the block stats are ``reduceat``s over
+    group slices and the term-stat partial a ``reduceat`` over each
+    term's blocks. The run comes out in (term, first_doc) order, the
+    final on-disk order."""
+    def merged(parts: list) -> np.ndarray:
+        out = np.concatenate(parts, dtype=np.int32)
+        parts.clear()
+        return out
+    row_idx = merged(row_parts)
+    if row_idx.size == 0:
+        return (_POSTINGS_RUN_SCHEMA.empty_table(),
+                _TERM_STATS_SCHEMA.empty_table())
+    uniq = pa.concat_arrays(uniq_parts)
+    field_of_code = np.repeat(np.arange(len(uniq_parts)),
+                              [len(u) for u in uniq_parts])
+    # rank the vocabulary: codes ascend with the term strings (UTF-8
+    # byte order is code-point order, the order of Python's ``sorted``)
+    vorder = pc.sort_indices(uniq).to_numpy()
+    rank = np.empty(vorder.size, dtype=np.int32)
+    rank[vorder] = np.arange(vorder.size, dtype=np.int32)
+    codes = rank[merged(code_parts)]
+    field_of_code = field_of_code[vorder]
+    terms = uniq.take(vorder)
+    del uniq, vorder, rank
+
+    # (term, doc) aggregation: sort by (code, row[, pos]), run-length
+    if with_positions:
+        positions = merged(pos_parts)
+        order = np.lexsort((positions, row_idx, codes))
+        p = positions[order]
+        del positions
+    else:
+        order = np.lexsort((row_idx, codes))
+        p = None
+    c = codes[order]
+    r = row_idx[order]
+    del codes, row_idx, order
+    new_grp = np.empty(c.size, dtype=bool)
+    new_grp[0] = True
+    np.not_equal(c[1:], c[:-1], out=new_grp[1:])
+    new_grp[1:] |= r[1:] != r[:-1]
+    starts = np.flatnonzero(new_grp)  # token offset of each group
+    del new_grp
+    g_tf = np.diff(starts, append=c.size)
+    g_code = c[starts]
+    g_row = r[starts]
+    del c, r
+    g_doc = doc_ids[g_row]
+    g_dl = field_dl[field_of_code[g_code], g_row].astype(np.int64)
+    del g_row
+
+    # block boundaries (group index space): every term's groups are cut
+    # into ≤BLOCK_SIZE slices
+    t_bounds = np.flatnonzero(np.r_[True, g_code[1:] != g_code[:-1]])
+    lens = np.diff(t_bounds, append=g_code.size)
+    nblk = (lens + BLOCK_SIZE - 1) // BLOCK_SIZE
+    t_blk = np.cumsum(nblk) - nblk  # first block of each term
+    term_of = np.repeat(np.arange(t_bounds.size), nblk)
+    blk_lo = (t_bounds[term_of]
+              + (np.arange(term_of.size) - t_blk[term_of]) * BLOCK_SIZE)
+    blk_hi = np.minimum(blk_lo + BLOCK_SIZE, (t_bounds + lens)[term_of])
+    del term_of
+
+    if p is not None:
+        # positions delta within each (doc, term) group; a block's
+        # payload is its groups' token range
+        pos_payload = varint_binary_array(delta_restarting(p, starts),
+                                          starts[blk_lo])
+        del p
+    else:
+        pos_payload = varint_binary_array(np.empty(0, np.uint64),
+                                          np.zeros(blk_lo.size, np.int64))
+    sum_tf = np.add.reduceat(g_tf, blk_lo)
+    run = pa.table({
+        "term": terms.take(g_code[blk_lo]),
+        "first_doc": g_doc[blk_lo],
+        "last_doc": g_doc[blk_hi - 1],
+        "doc_count": (blk_hi - blk_lo).astype(np.int32),
+        "sum_tf": sum_tf,
+        "max_tf": np.maximum.reduceat(g_tf, blk_lo).astype(np.int32),
+        "min_dl": np.minimum.reduceat(g_dl, blk_lo),
+        "docs_payload": varint_binary_array(
+            delta_restarting(g_doc, blk_lo), blk_lo),
+        "tfs_payload": varint_binary_array(
+            g_tf.astype(np.uint64) - np.uint64(1), blk_lo),
+        "dls_payload": varint_binary_array(g_dl, blk_lo),
+        "pos_payload": pos_payload,
+    }, schema=_POSTINGS_RUN_SCHEMA)
+    ts = pa.table({
+        "term": terms.take(g_code[t_bounds]),
+        "df": lens.astype(np.int64),
+        "cf": np.add.reduceat(sum_tf, t_blk),
+    }, schema=_TERM_STATS_SCHEMA)
+    return run, ts
+
+
+def run_spimi(storage: IndexStorage, docs: DataFrame, num_partitions: int,
+              num_shards: int, with_positions: bool,
+              fields: dict[str, str], bigrams: bool, meta_cols: list[str],
+              attempt: int = 1, base_part: int = 0, skip=(),
+              num_tasks: int | None = None) -> list[dict]:
+    """The SPIMI job shared by bulk builds and appends: docs → source
+    partitions ``base_part + pmod(xxhash64(repo, path, commit), P)``
+    (``skip`` lists already-committed ones) → one ``_spimi_writer``
+    group each → manifest rows.
+
+    Task granularity: source partition ``p`` runs on task ``p mod T``
+    (``repartitionById``). The exchange carries its own partition count
+    and AQE never coalesces it (its origin is REPARTITION_BY_NUM), so no
+    session conf is pinned. Hash placement (``groupBy`` alone) would
+    scatter groups by ``pmod(murmur3(p), T)`` — several groups on one
+    task and idle cores beside it — and AQE would coalesce its small
+    map output into even fewer tasks, whereas the cost driver is the
+    per-GROUP Python tokenize+encode work, not bytes. ``T`` defaults to
+    a handful of groups per task at most: enough tasks for wave balance
+    (≥4 per core), few enough that the ~0.3 s/group UDF work amortizes
+    the per-Python-task fixed cost (~50-150 ms)."""
+    P = num_partitions
+    if num_tasks is None:
+        num_tasks = min(P, max(32, 4 * docs.sparkSession.sparkContext
+                               .defaultParallelism))
+    base_cols = ["repo", "path", "commit", "lang", "content"]
+    extra = [c for c in {*fields.values(), *meta_cols}
+             if c not in base_cols]
+    prepared = docs.select(
+        *base_cols, *extra,
+        F.sha2(F.col("content"), 256).alias("content_sha256"),
+        (F.lit(base_part) + F.pmod(F.xxhash64("repo", "path", "commit"),
+                                   F.lit(P))).cast("int").alias("src_part"),
+    )
+    if skip:
+        prepared = prepared.filter(~F.col("src_part").isin(list(skip)))
+    # shard = src_part mod S: stable under later appends (new parts get
+    # ids above P and map into the same shard space); blocks within a
+    # (term, shard) stay disjoint+sorted because doc ids are
+    # partition-prefixed
+    writer = _spimi_writer(storage, with_positions, attempt,
+                           lambda sp: sp % num_shards, fields, bigrams,
+                           meta_cols)
+    rows = (prepared.repartitionById(int(num_tasks), "src_part")
+            .groupBy("src_part").applyInPandas(writer, MANIFEST_SCHEMA)
+            .collect())  # tiny: one row per partition
+    return [r.asDict() for r in rows]
 
 
 def field_of_term(term: str) -> str:
@@ -433,7 +491,6 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str,
         if not 0.0 <= bv <= 1.0:
             raise ValueError(f"b_by_field[{fname!r}]={bv} outside [0,1]")
     storage = IndexStorage(index_dir)
-    sc_parallelism = spark.sparkContext.defaultParallelism
     if num_partitions is None:
         # bound docs per TASK, not tasks per core: oversized partitions
         # put every worker in the fresh-allocation memory regime and
@@ -441,73 +498,22 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str,
         # threads going from 10k-doc to 2.5k-doc tasks); small tasks
         # also balance load and shrink the resume/checkpoint unit
         n = docs.count()
-        num_partitions = max(sc_parallelism, 4,
+        num_partitions = max(spark.sparkContext.defaultParallelism, 4,
                              -(-n // TARGET_DOCS_PER_PARTITION))
     P = num_partitions
 
-    base_cols = ["repo", "path", "commit", "lang", "content"]
-    extra = [c for c in {*fields.values(), *meta_cols}
-             if c not in base_cols]
-    prepared = docs.select(
-        *base_cols, *extra,
-        F.sha2(F.col("content"), 256).alias("content_sha256"),
-        F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(P))
-         .cast("int").alias("src_part"),
-    )
-
     done = storage.completed_partitions() if resume else {}
-    if done:
-        prepared = prepared.filter(~F.col("src_part").isin(list(done)))
     _mark("setup")
 
     # ---- step A: SPIMI packed-block runs, checkpointed per partition ----
-    # shard = src_part mod S: stable under later appends (new parts get
-    # ids above P and map into the same shard space); blocks within a
-    # (term, shard) stay disjoint+sorted because doc ids are
-    # partition-prefixed
-    manifests = prepared.groupBy("src_part").applyInPandas(
-        _spimi_writer(storage, with_positions, attempt,
-                      lambda sp: sp % num_shards, fields, bigrams,
-                      meta_cols),
-        MANIFEST_SCHEMA)
-    # Pin this job's task granularity: AQE coalesces the grouped-map
-    # shuffle by MAP-OUTPUT BYTES (text compresses ~4x, so the 64 MB
-    # advisory target collapses hundreds of groups into a handful of
-    # tasks — measured 5 tasks at local[4], i.e. a guaranteed straggler
-    # wave), but the cost driver here is per-GROUP Python tokenize+
-    # encode work, not bytes.  The other extreme (one group per task)
-    # pays the per-Python-task fixed cost (worker handshake + Arrow
-    # stream setup, ~50-150 ms) 256 times — measured ~35 s of pure
-    # overhead at local[1].  The sweet spot packs a handful of groups
-    # per task: enough tasks for wave balance (≥4 per core), few
-    # enough that the ~0.3 s/group UDF work amortizes the task cost.
-    # AQE is disabled for this job outright: partitioning is pinned, so
-    # replanning only adds driver latency between the two stages.
-    if num_tasks is None:
-        num_tasks = min(P, max(32, 4 * sc_parallelism))
-    conf = spark.conf
-    pinned = {"spark.sql.shuffle.partitions": str(int(num_tasks)),
-              "spark.sql.adaptive.enabled": "false"}
-    saved = {}
-    for k, v in pinned.items():
-        try:
-            saved[k] = conf.get(k)
-        except Exception:
-            saved[k] = None
-        conf.set(k, v)
-    try:
-        new_rows = manifests.collect()  # tiny: one row per partition
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                conf.unset(k)
-            else:
-                conf.set(k, v)
+    new_rows = run_spimi(storage, docs, P, num_shards, with_positions,
+                         fields, bigrams, meta_cols, attempt=attempt,
+                         skip=list(done), num_tasks=num_tasks)
     _mark("spimi_job")
 
     # ---- global stats: free — summed from the manifest checkpoints
     # (docs + token counts are per-partition lineage metrics) -------------
-    all_manifests = list(done.values()) + [r.asDict() for r in new_rows]
+    all_manifests = list(done.values()) + new_rows
     n_docs = sum(m["docs"] for m in all_manifests)
     total_tokens = sum(m["tokens"] for m in all_manifests)
     avgdl = (total_tokens / n_docs) if n_docs else 0.0
@@ -587,8 +593,6 @@ def aggregate_term_stats(spark: SparkSession,
     whole aggregation is a driver-side pyarrow group_by — no Spark job,
     no shuffle, no per-job fixed latency. Past a size threshold (100-TB
     builds: vocab × partitions rows) it stays a distributed groupBy."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
     names = [n for n in storage.io.listdir(storage.term_stats_parts_dir)
              if n.endswith(".parquet")]
     paths = [os.path.join(storage.term_stats_parts_dir, n)

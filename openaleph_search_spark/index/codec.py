@@ -49,30 +49,42 @@ _SHIFTS = np.arange(1, 10, dtype=np.uint64) * np.uint64(7)
 _THRESH = (np.uint64(1) << _SHIFTS).astype(np.uint64)  # 2^7, 2^14, ... 2^63
 
 
-def varint_encode(values: np.ndarray) -> bytes:
-    """LEB128-encode a uint64 array, fully vectorized."""
+def _varint_pack(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """One vectorized LEB128 pass over a uint64 array → (encoded bytes
+    as a uint8 array, byte offset of every value plus the end offset).
+    The single slicing core: every per-group view of an encoded run
+    (``varint_encode_sliced``, ``varint_binary_array``) is a gather of
+    these offsets at its group starts."""
     arr = np.ascontiguousarray(values, dtype=np.uint64)
     n = arr.shape[0]
     if n == 0:
-        return b""
-    if arr.max() < 128:  # common fast path: every value is one byte
-        return arr.astype(np.uint8).tobytes()
+        return np.empty(0, dtype=np.uint8), np.zeros(1, dtype=np.int64)
+    vmax = arr.max()
+    if vmax < 128:  # common fast path: every value is one byte
+        return arr.astype(np.uint8), np.arange(n + 1, dtype=np.int64)
     # bytes needed per value: 1 + count of thresholds <= value
     nbytes = np.ones(n, dtype=np.int64)
-    for t in _THRESH:
+    for t in _THRESH[_THRESH <= vmax]:
         nbytes += arr >= t
-    ends = np.cumsum(nbytes)
-    starts = ends - nbytes
-    out = np.zeros(int(ends[-1]), dtype=np.uint8)
-    for j in range(10):
-        mask = nbytes > j
-        if not mask.any():
-            break
-        idx = starts[mask] + j
-        chunk = (arr[mask] >> np.uint64(7 * j)) & np.uint64(0x7F)
-        cont = (nbytes[mask] - 1 > j).astype(np.uint8) << 7
-        out[idx] = chunk.astype(np.uint8) | cont
-    return out.tobytes()
+    offsets = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(nbytes, out=offsets[1:])
+    out = np.empty(int(offsets[-1]), dtype=np.uint8)
+    # emit byte j of every value at once, then narrow to the values
+    # that still have bytes left
+    at, rest = offsets[:-1], arr
+    while at.size:
+        more = nbytes > 1
+        out[at] = ((rest & np.uint64(0x7F)).astype(np.uint8)
+                   | (more.view(np.uint8) << 7))
+        at = at[more] + 1
+        rest = rest[more] >> np.uint64(7)
+        nbytes = nbytes[more] - 1
+    return out, offsets
+
+
+def varint_encode(values: np.ndarray) -> bytes:
+    """LEB128-encode a uint64 array, fully vectorized."""
+    return _varint_pack(values)[0].tobytes()
 
 
 def varint_decode(buf: bytes | np.ndarray) -> np.ndarray:
@@ -134,25 +146,31 @@ def varint_encode_sliced(values: np.ndarray,
                          group_starts: np.ndarray) -> list[bytes]:
     """One vectorized varint pass over ``values``, returned as one byte
     chunk per group (the chunks concatenate to ``varint_encode``'s
-    output). The workhorse behind per-doc position payloads and per-
-    block payload slicing — avoids per-small-array encoder calls."""
-    n = values.shape[0]
-    if n == 0:
+    output) — avoids per-small-array encoder calls."""
+    if values.shape[0] == 0:
         return []
-    v = np.ascontiguousarray(values, dtype=np.uint64)
-    if v.max() < 128:  # 1-byte fast path: byte offsets == value offsets
-        buf = v.astype(np.uint8).tobytes()
-        bounds = list(group_starts) + [n]
-        return [buf[bounds[i]:bounds[i + 1]]
-                for i in range(len(bounds) - 1)]
-    buf = varint_encode(v)
-    nbytes = np.ones(n, dtype=np.int64)
-    for t in _THRESH:
-        nbytes += v >= t
-    ends = np.cumsum(nbytes)
-    starts_b = np.concatenate([[0], ends[:-1]])
-    bounds = list(starts_b[group_starts]) + [int(ends[-1])]
+    buf, offsets = _varint_pack(values)
+    bounds = np.append(offsets[group_starts], offsets[-1]).tolist()
+    buf = buf.tobytes()
     return [buf[bounds[i]:bounds[i + 1]] for i in range(len(bounds) - 1)]
+
+
+def varint_binary_array(values: np.ndarray, group_starts: np.ndarray):
+    """``varint_encode_sliced`` as an Arrow ``binary`` array: one value
+    per group over the single encoded buffer plus gathered offsets — no
+    per-group Python ``bytes``. ``group_starts`` ascend within
+    ``[0, len(values)]``; a start equal to the next one (or to
+    ``len(values)``) yields an empty value."""
+    import pyarrow as pa
+    buf, offsets = _varint_pack(values)
+    if buf.size > np.iinfo(np.int32).max:
+        raise OverflowError(
+            f"{buf.size} varint bytes exceed one Arrow binary array; "
+            "build with more source partitions")
+    bounds = np.append(offsets[group_starts], offsets[-1]).astype(np.int32)
+    return pa.Array.from_buffers(
+        pa.binary(), bounds.size - 1,
+        [None, pa.py_buffer(bounds), pa.py_buffer(buf)])
 
 
 def delta_restarting(values: np.ndarray,
@@ -166,18 +184,6 @@ def delta_restarting(values: np.ndarray,
         np.subtract(v[1:], v[:-1], out=d[1:])
         d[group_starts] = v[group_starts]
     return d
-
-
-def encode_positions_grouped(flat_positions: np.ndarray,
-                             group_starts: np.ndarray) -> list[bytes]:
-    """Vectorized per-group positions encoding: delta within each group,
-    one varint byte-chunk per group — so SPIMI can pre-encode per
-    (term, doc) and the merge stage just joins bytes (the shuffle then
-    carries compressed binary, not int arrays)."""
-    if flat_positions.shape[0] == 0:
-        return []
-    d = delta_restarting(flat_positions, group_starts)
-    return varint_encode_sliced(d, group_starts)
 
 
 def decode_positions(buf: bytes, tfs: np.ndarray) -> list[np.ndarray]:
@@ -202,8 +208,10 @@ def encode_blocks(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
 
     ``doc_ids`` must be sorted ascending and unique.  Positions can be
     given either as raw per-doc arrays (``positions``) or as per-doc
-    pre-encoded varint chunks (``pos_payloads``, the SPIMI fast path —
-    the merge then only concatenates bytes).  Returns a list of dicts
+    pre-encoded varint chunks (``pos_payloads`` — each block then only
+    concatenates bytes).  The block-at-a-time reference for the SPIMI
+    kernel (``build._pack_run``), which encodes every term of a
+    partition in single passes.  Returns a list of dicts
     matching the postings-table block columns (minus term/shard, which
     the caller adds).
     """

@@ -15,10 +15,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from ..index.build import (MANIFEST_SCHEMA, _read_field_stats,
-                           _spimi_writer)
+from ..index.build import _read_field_stats, run_spimi
 from ..index.storage import IndexStorage
 
 
@@ -40,20 +39,8 @@ def append_batch(spark: SparkSession, docs: DataFrame, index_dir: str,
     # epoch partitions live above the base namespace → doc ids unique
     base_part = (max(storage.completed_partitions(), default=P - 1) + 1)
 
-    base_cols = ["repo", "path", "commit", "lang", "content"]
-    extra_cols = [c for c in {*fields.values(), *meta_cols}
-                  if c not in base_cols]
-    prepared = docs.select(
-        *base_cols, *extra_cols,
-        F.sha2(F.col("content"), 256).alias("content_sha256"),
-        (F.lit(base_part) + F.pmod(
-            F.xxhash64("repo", "path", "commit"), F.lit(P)))
-        .cast("int").alias("src_part"))
-    (prepared.groupBy("src_part")
-     .applyInPandas(_spimi_writer(storage, meta["with_positions"], 1,
-                                  lambda sp: sp % S, fields, bigrams,
-                                  meta_cols),
-                    MANIFEST_SCHEMA)).collect()
+    run_spimi(storage, docs, P, S, meta["with_positions"], fields, bigrams,
+              meta_cols, base_part=base_part)
 
     n_docs = storage.doc_meta(spark).count()
     # per-field avgdl over ALL docs (base + appended) from the

@@ -1,8 +1,9 @@
 """Profile build_index phase walls at two parallelism levels.
 
 Where does the non-UDF wall go at local[1] vs local[4]?  Prints a
-per-level breakdown: spimi job wall vs sum(udf task secs), driver-side
-term_stats / field_stats / meta walls, and the implied fixed cost.
+per-level breakdown: spimi job wall vs sum(udf task secs), source
+partitions per SPIMI task (from the manifests' ``task`` key), driver-
+side term_stats / field_stats / meta walls, and the implied fixed cost.
 
 Usage: python scripts/profile_build.py [cores ...]   (default: 1 4)
 Env: SPARK_GRAFT_PROFILE_DOCS (default /tmp/bench_docs_r128),
@@ -26,15 +27,10 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 PARTITIONS = 8 * CPUS
 
 
-SHUF = os.environ.get("SPARK_GRAFT_SHUFFLE", "")
-
-
 def session(cores: int):
     from pyspark.sql import SparkSession
     return (SparkSession.builder.master(f"local[{cores}]")
             .appName(f"profile-{cores}")
-            .config("spark.sql.shuffle.partitions",
-                    SHUF or str(max(cores, 8)))
             .config("spark.sql.session.timeZone", "UTC")
             .config("spark.sql.adaptive.enabled", "true")
             .config("spark.driver.memory", "48g")
@@ -61,10 +57,13 @@ def profile(cores: int) -> dict:
                     num_shards=max(4, CPUS // 2), bigrams=True,
                     phase_log=ph)
         wall = time.time() - t0
+        import collections
         import glob
-        secs = [json.load(open(m))["seconds"]
-                for m in glob.glob(os.path.join(out, "manifest",
-                                                "part=*.json"))]
+        man = [json.load(open(m))
+               for m in glob.glob(os.path.join(out, "manifest",
+                                               "part=*.json"))]
+        secs = [m["seconds"] for m in man]
+        per_task = collections.Counter(m.get("task") for m in man)
         rec = {"cores": cores, "docs": n, "wall": round(wall, 2),
                "docs_per_sec": round(n / wall, 1),
                "phases": ph,
@@ -72,6 +71,10 @@ def profile(cores: int) -> dict:
                "udf_mean": round(sum(secs) / max(len(secs), 1), 3),
                "udf_max": round(max(secs), 3) if secs else 0,
                "n_manifests": len(secs),
+               "tasks": len(per_task),
+               # {source partitions on a task: number of such tasks}
+               "parts_per_task": dict(sorted(collections.Counter(
+                   per_task.values()).items())),
                "spimi_wall_minus_udf_ideal": round(
                    ph.get("spimi_job", 0) - sum(secs) / cores, 2)}
         if best is None or rec["wall"] < best["wall"]:

@@ -5,7 +5,8 @@ from hypothesis import given, settings, strategies as st
 
 from openaleph_search_spark.index.codec import (
     BLOCK_SIZE, bm25_tfnorm, decode_block, decode_positions, encode_blocks,
-    encode_positions, varint_decode, varint_encode)
+    encode_positions, varint_binary_array, varint_decode, varint_encode,
+    varint_encode_sliced)
 
 
 @given(st.lists(st.integers(min_value=0, max_value=2**64 - 1), max_size=500))
@@ -58,6 +59,24 @@ def test_positions_roundtrip(poslists):
     out = decode_positions(buf, tfs)
     for a, b in zip(pos, out):
         assert (a == b).all()
+
+
+@given(st.lists(st.integers(min_value=0, max_value=2**64 - 1), max_size=300),
+       st.data())
+@settings(max_examples=50, deadline=None)
+def test_varint_binary_array_matches_sliced(vals, data):
+    """The Arrow-binary slicing and the bytes-list slicing share one
+    core: same chunks, and both concatenate to varint_encode."""
+    arr = np.array(vals, dtype=np.uint64)
+    starts = np.array(sorted(data.draw(st.lists(
+        st.integers(min_value=0, max_value=arr.size), max_size=20))),
+        dtype=np.int64)
+    got = varint_binary_array(arr, starts).to_pylist()
+    assert len(got) == starts.size
+    assert b"".join(got) == varint_encode(arr[starts[0]:]
+                                          if starts.size else arr[:0])
+    if arr.size:
+        assert got == varint_encode_sliced(arr, starts)
 
 
 def test_varint_empty():
