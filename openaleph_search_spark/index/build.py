@@ -242,8 +242,8 @@ def _spimi_writer(storage: IndexStorage, with_positions: bool, attempt: int,
             meta_tbl,
             os.path.join(storage.doc_meta_dir, f"part={src_part}.parquet"))
         # per-doc per-field lengths (long format, zero rows skipped):
-        # compact() needs these to recompute exact per-field avgdl
-        # after deletes (the json partials below are pre-delete sums)
+        # compact() re-derives this partition's field-stat partial
+        # (the json below) from the rows of its surviving docs
         nz = [np.flatnonzero(dl) for _, dl in field_len_cols]
         storage.io.write_parquet_atomic(
             pa.table({
@@ -395,6 +395,15 @@ def _pack_run(row_parts: list, code_parts: list, pos_parts: list,
     return run, ts
 
 
+def default_tasks(spark: SparkSession, num_parts: int) -> int:
+    """Task count of a per-source-partition job (SPIMI, compaction):
+    at most a handful of partitions per task — enough tasks for wave
+    balance (≥4 per core), few enough to amortize the per-Python-task
+    fixed cost."""
+    return max(1, min(num_parts,
+                      max(32, 4 * spark.sparkContext.defaultParallelism)))
+
+
 def run_spimi(storage: IndexStorage, docs: DataFrame, num_partitions: int,
               num_shards: int, with_positions: bool,
               fields: dict[str, str], bigrams: bool, meta_cols: list[str],
@@ -418,8 +427,7 @@ def run_spimi(storage: IndexStorage, docs: DataFrame, num_partitions: int,
     the per-Python-task fixed cost (~50-150 ms)."""
     P = num_partitions
     if num_tasks is None:
-        num_tasks = min(P, max(32, 4 * docs.sparkSession.sparkContext
-                               .defaultParallelism))
+        num_tasks = default_tasks(docs.sparkSession, P)
     base_cols = ["repo", "path", "commit", "lang", "content"]
     extra = [c for c in {*fields.values(), *meta_cols}
              if c not in base_cols]
@@ -511,16 +519,8 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str,
                          skip=list(done), num_tasks=num_tasks)
     _mark("spimi_job")
 
-    # ---- global stats: free — summed from the manifest checkpoints
-    # (docs + token counts are per-partition lineage metrics) -------------
     all_manifests = list(done.values()) + new_rows
-    n_docs = sum(m["docs"] for m in all_manifests)
-    total_tokens = sum(m["tokens"] for m in all_manifests)
-    avgdl = (total_tokens / n_docs) if n_docs else 0.0
-    avgdl_by_field = _read_field_stats(storage)
-    _mark("field_stats")
-
-    if n_docs == 0:
+    if not sum(m["docs"] for m in all_manifests):
         # empty corpus: materialize empty tables so readers work
         # no partitionBy: an empty partitioned write leaves no schema
         (spark.createDataFrame([], POSTINGS_SCHEMA).write
@@ -555,17 +555,11 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str,
     # across part files (partition-prefixed doc ids), so the executor's
     # sort-by-first_doc merge needs no re-encode.
 
-    # ---- term stats (global df/cf — unlike ES's per-shard idf) over the
-    # per-partition partials written in step A ---------------------------
-    aggregate_term_stats(spark, storage)
-    _mark("term_stats")
-
-    storage.write_meta({
+    commit_stats(spark, storage, {
         "num_partitions": P, "num_shards": num_shards,
         "block_size": BLOCK_SIZE, "k1": K1, "b": B,
         "b_by_field": b_by_field,
-        "with_positions": with_positions, "n_docs": n_docs, "avgdl": avgdl,
-        "avgdl_by_field": avgdl_by_field,
+        "with_positions": with_positions,
         "fields": sorted(["content", *fields]),
         "field_map": fields,
         "meta_cols": meta_cols,
@@ -574,9 +568,29 @@ def build_index(spark: SparkSession, docs: DataFrame, index_dir: str,
         "layout_version": LAYOUT_VERSION,
         "built_partitions": len(done) + len(new_rows),
         "resumed_from": len(done),
-    })
-    _mark("write_meta")
+    }, all_manifests, _mark)
     return storage
+
+
+def commit_stats(spark: SparkSession, storage: IndexStorage, meta: dict,
+                 manifests, mark=lambda phase: None) -> None:
+    """The stats tail of every index write (build, append, compact),
+    run over the per-partition partials the partition jobs committed:
+    per-field avgdl from the ``fields_part=K.json`` partials, N summed
+    from the manifest rows (``manifests``: one per source partition),
+    the global term dictionary (df/cf — unlike ES's per-shard idf) from
+    ``term_stats_parts``, then ``meta.json`` — the commit point — last.
+    ``mark(phase)`` closes each phase's timer."""
+    n_docs = sum(int(m["docs"]) for m in manifests)
+    avgdl_by_field = _read_field_stats(storage)
+    mark("field_stats")
+    aggregate_term_stats(spark, storage)
+    mark("term_stats")
+    meta.update({"n_docs": n_docs,
+                 "avgdl": avgdl_by_field.get("content", 0.0),
+                 "avgdl_by_field": avgdl_by_field})
+    storage.write_meta(meta)
+    mark("write_meta")
 
 
 # below this, the partials fit trivially in driver memory and a whole
@@ -593,8 +607,8 @@ def aggregate_term_stats(spark: SparkSession,
     whole aggregation is a driver-side pyarrow group_by — no Spark job,
     no shuffle, no per-job fixed latency. Past a size threshold (100-TB
     builds: vocab × partitions rows) it stays a distributed groupBy."""
-    names = [n for n in storage.io.listdir(storage.term_stats_parts_dir)
-             if n.endswith(".parquet")]
+    names = sorted(n for n in storage.io.listdir(storage.term_stats_parts_dir)
+                   if n.endswith(".parquet"))
     paths = [os.path.join(storage.term_stats_parts_dir, n)
              for n in names]
     from concurrent.futures import ThreadPoolExecutor
@@ -607,8 +621,11 @@ def aggregate_term_stats(spark: SparkSession,
         # N→4N scaling target)
         with ThreadPoolExecutor(max_workers=16) as pool:
             tables = list(pool.map(storage.io.read_parquet, paths))
+        # single-threaded over the name-sorted partials: the row order
+        # is the same on every run (the threaded aggregation's is not),
+        # and at 200k terms x 32 partials it was no slower
         merged = (pa.concat_tables(tables)
-                  .group_by("term")
+                  .group_by("term", use_threads=False)
                   .aggregate([("df", "sum"), ("cf", "sum")])
                   .rename_columns(["term", "df", "cf"]))
         storage.io.mkdirs(storage.term_stats_dir)

@@ -1,12 +1,19 @@
-"""Index mutations: append (S3 upsert path), delete (S4/S5), and the
-safety rules that keep query-time pruning correct afterwards.
+"""Index mutations: append (S3 upsert path), delete (S4/S5), compaction,
+and the safety rules that keep query-time pruning correct afterwards.
 
 The reference's mutations are ES row-level ops
 (/root/reference/openaleph_search/index/indexer.py:36-51,181-189,
 index/entities.py:361-369). Columnar Spark-first equivalents:
 
 * **delete** = tombstones: a small doc_id table subtracted at query
-  time (Lucene's own soft-delete design). ``compact()`` folds them in.
+  time (Lucene's own soft-delete design).
+* **compact** = a per-source-partition rewrite (Delta Lake's
+  file-level rewrite-and-replace): every partition holding a
+  tombstoned doc rewrites its own ``part=K`` files without the dead
+  docs, under the same names, then the build's stats tail refreshes
+  N, avgdl and the term dictionary and the tombstones go. The layout
+  stays the build layout, so the zero-exchange scatter query path
+  keeps working on a compacted index.
 * **append** = an incremental build of new source partitions into the
   same layout. Appends change collection stats (N, avgdl) — harmless:
   impact bounds are derived at query time from each block's stored
@@ -15,10 +22,21 @@ index/entities.py:361-369). Columnar Spark-first equivalents:
 """
 from __future__ import annotations
 
+import json
 import os
+import time
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .build import (_TERM_STATS_SCHEMA, DOC_ID_PART_SHIFT, commit_stats,
+                    default_tasks)
+from .codec import (decode_block, decode_positions, encode_positions,
+                    varint_encode)
 from .storage import IndexStorage
 
 
@@ -26,12 +44,17 @@ def tombstones_dir(storage: IndexStorage) -> str:
     return os.path.join(storage.root, "tombstones")
 
 
+def _has_tombstones(storage: IndexStorage) -> bool:
+    return any(f.endswith(".parquet")
+               for f in storage.io.listdir(tombstones_dir(storage)))
+
+
 def read_tombstones(spark: SparkSession,
                     storage: IndexStorage) -> DataFrame | None:
-    d = tombstones_dir(storage)
-    if not any(f.endswith(".parquet") for f in storage.io.listdir(d)):
+    if not _has_tombstones(storage):
         return None
-    return spark.read.parquet(d).select("doc_id").distinct()
+    return (spark.read.parquet(tombstones_dir(storage))
+            .select("doc_id").distinct())
 
 
 def delete_docs(spark: SparkSession, storage: IndexStorage,
@@ -54,64 +77,153 @@ def delete_by_ids(spark: SparkSession, storage: IndexStorage,
     return delete_docs(spark, storage, F.col("doc_id").isin(doc_ids))
 
 
-def _drop_docs_cogrouped(with_positions: bool):
-    """Cogrouped fn (per shard): decode only blocks whose doc range can
-    contain a tombstoned id, drop those docs, re-encode (incl. the
-    block's min_dl — impact bounds are derived from it live at query
-    time, so no bound-refill pass exists).
+def _drop_block_docs(row: dict, dead: np.ndarray,
+                     with_positions: bool) -> dict | None:
+    """One postings block minus the docs in ``dead`` (sorted): the row
+    itself when none of its docs is dead, None when all are, else the
+    block re-encoded with refreshed stats — incl. ``max_tf`` and
+    ``min_dl``, from which impact bounds are derived live at query
+    time, so no bound-refill pass exists."""
+    d, t, l = decode_block(row)
+    keep = ~np.isin(d.astype(np.int64), dead, assume_unique=True)
+    if keep.all():
+        return row
+    if not keep.any():
+        return None
+    pos = (decode_positions(row["pos_payload"], t)
+           if with_positions else None)
+    d, t, l = d[keep], t[keep], l[keep]
+    deltas = np.empty_like(d)
+    deltas[0] = d[0]
+    np.subtract(d[1:], d[:-1], out=deltas[1:])
+    return {
+        **row,
+        "first_doc": int(d[0]),
+        "last_doc": int(d[-1]),
+        "doc_count": int(d.size),
+        "sum_tf": int(t.sum()),
+        "max_tf": int(t.max()),
+        "min_dl": int(l.min()),
+        "docs_payload": varint_encode(deltas),
+        "tfs_payload": varint_encode(t - np.uint64(1)),
+        "dls_payload": varint_encode(l),
+        "pos_payload": (encode_positions(
+            [p for p, k in zip(pos, keep) if k])
+            if with_positions else b""),
+    }
 
-    Tombstones arrive as the cogroup's right side, so the dead-id set
-    stays distributed (sharded), never collected to the driver."""
-    import numpy as np
-    import pandas as pd
-    from .codec import (decode_block, decode_positions,
-                        encode_positions, varint_encode)
 
-    def fn(blocks_pdf: pd.DataFrame, dead_pdf: pd.DataFrame
-           ) -> pd.DataFrame:
-        if blocks_pdf.empty:
-            return blocks_pdf
-        dead = np.sort(dead_pdf["doc_id"].to_numpy(np.int64))
-        if dead.size == 0:
-            return blocks_pdf
-        lo = np.searchsorted(dead, blocks_pdf["first_doc"].to_numpy())
-        hi = np.searchsorted(dead, blocks_pdf["last_doc"].to_numpy(),
-                             side="right")
-        touched = hi > lo  # block doc range contains ≥1 dead id
-        rows = []
-        for _, row in blocks_pdf[touched].iterrows():
-            d, t, l = decode_block(row)
-            keep = ~np.isin(d.astype(np.int64), dead,
-                            assume_unique=True)
-            if keep.all():
-                rows.append(row)
-                continue
-            if not keep.any():
-                continue
-            pos = (decode_positions(row["pos_payload"], t)
-                   if with_positions else None)
-            d, t, l = d[keep], t[keep], l[keep]
-            deltas = np.empty_like(d)
-            deltas[0] = d[0]
-            np.subtract(d[1:], d[:-1], out=deltas[1:])
-            new = row.copy()
-            new["first_doc"] = int(d[0])
-            new["last_doc"] = int(d[-1])
-            new["doc_count"] = int(d.size)
-            new["sum_tf"] = int(t.sum())
-            new["max_tf"] = int(t.max())
-            new["min_dl"] = int(l.min())
-            new["docs_payload"] = varint_encode(deltas)
-            new["tfs_payload"] = varint_encode(t - np.uint64(1))
-            new["dls_payload"] = varint_encode(l)
-            new["pos_payload"] = (encode_positions(
-                [p for p, k in zip(pos, keep) if k])
-                if with_positions else b"")
-            rows.append(new)
-        parts = [blocks_pdf[~touched]]
-        if rows:
-            parts.append(pd.DataFrame(rows))
-        return pd.concat(parts, ignore_index=True)
+def _drop_postings(run: pa.Table, dead: np.ndarray,
+                   with_positions: bool) -> pa.Table:
+    """A partition's postings run minus the dead docs, rows kept in
+    their (term, first_doc) order. Only blocks whose doc range can hold
+    a dead id are decoded."""
+    if run.num_rows == 0:
+        return run
+    lo = np.searchsorted(dead, run.column("first_doc").to_numpy())
+    hi = np.searchsorted(dead, run.column("last_doc").to_numpy(),
+                         side="right")
+    touched = np.flatnonzero(hi > lo)
+    if touched.size == 0:
+        return run
+    new_rows, new_at = [], []
+    for i, row in zip(touched, run.take(touched).to_pylist()):
+        new = _drop_block_docs(row, dead, with_positions)
+        if new is not None:
+            new_rows.append(new)
+            new_at.append(i)
+    mask = np.ones(run.num_rows, dtype=bool)
+    mask[touched] = False
+    kept = np.flatnonzero(mask)
+    out = pa.concat_tables([
+        run.take(kept),
+        pa.Table.from_pylist(new_rows, schema=run.schema)])
+    return out.take(np.argsort(np.concatenate(
+        [kept, np.asarray(new_at, dtype=np.int64)]), kind="stable"))
+
+
+def _term_stats_partial(run: pa.Table) -> pa.Table:
+    """A partition's (term-sorted) postings run → its df/cf partial, in
+    the build's term order: sums over each term's run of blocks."""
+    if run.num_rows == 0:
+        return _TERM_STATS_SCHEMA.empty_table()
+    term = run.column("term").combine_chunks()
+    starts = np.flatnonzero(np.r_[True, pc.not_equal(
+        term[1:], term[:-1]).to_numpy(zero_copy_only=False)])
+    return pa.table({
+        "term": term.take(starts),
+        "df": np.add.reduceat(
+            run.column("doc_count").to_numpy().astype(np.int64), starts),
+        "cf": np.add.reduceat(run.column("sum_tf").to_numpy(), starts),
+    }, schema=_TERM_STATS_SCHEMA)
+
+
+# one compaction task's output row per rewritten source partition
+_COMPACT_SCHEMA = ("src_part int, docs long, tokens long, postings long, "
+                   "dropped long, seconds double, task int")
+
+
+def _compact_writer(storage: IndexStorage, num_shards: int,
+                    with_positions: bool):
+    """Grouped-map fn: the tombstoned ids of one source partition K →
+    K's files rewritten without those docs, under the same names.
+
+    Data files first (postings, doc_meta, field_lens), then the
+    partials re-derived from them (term_stats_parts, fields_part=K),
+    then the manifest — the commit, as in the build. A crash anywhere
+    leaves a correct index: the tombstones still mask the dead docs and
+    the global stats are still the pre-compaction ones; re-running
+    ``compact()`` re-derives every file from the (partly) cleaned data,
+    so it converges to the same files."""
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        t0 = time.time()
+        io = storage.io
+        part = int(pdf["src_part"].iloc[0])
+        name = f"part={part}.parquet"
+        dead = np.unique(pdf["doc_id"].to_numpy(np.int64))
+
+        post_path = os.path.join(storage.postings_dir,
+                                 f"shard={part % num_shards}", name)
+        run = _drop_postings(io.read_parquet(post_path), dead,
+                             with_positions)
+        io.write_parquet_atomic(run, post_path)
+
+        def drop_rows(table_dir: str) -> tuple[pa.Table, int]:
+            path = os.path.join(table_dir, name)
+            t = io.read_parquet(path)
+            live = t.filter(pa.array(
+                ~np.isin(t.column("doc_id").to_numpy(), dead)))
+            io.write_parquet_atomic(live, path)
+            return live, t.num_rows - live.num_rows
+        dm, dropped = drop_rows(storage.doc_meta_dir)
+        fl, _ = drop_rows(storage.field_lens_dir)
+
+        io.write_parquet_atomic(
+            _term_stats_partial(run),
+            os.path.join(storage.term_stats_parts_dir, name))
+
+        n = dm.num_rows
+        fl_field = fl.column("field").to_numpy(zero_copy_only=False)
+        fl_dl = fl.column("dl").to_numpy()
+        fs_path = os.path.join(storage.manifest_dir,
+                               f"fields_part={part}.json")
+        io.write_bytes_atomic(fs_path, json.dumps({
+            f: (n, int(fl_dl[fl_field == f].sum()))
+            for f in json.loads(io.read_bytes(fs_path))}).encode())
+
+        man = json.loads(io.read_bytes(storage.manifest_path(part)))
+        man.update({"docs": n, "postings": run.num_rows,
+                    "tokens": int(dm.column("doc_len").to_numpy()
+                                  .sum(dtype=np.int64))})
+        io.write_bytes_atomic(storage.manifest_path(part),
+                              json.dumps(man).encode())
+
+        tc = TaskContext.get()
+        return pd.DataFrame([{
+            "src_part": part, "docs": n, "tokens": man["tokens"],
+            "postings": run.num_rows, "dropped": dropped,
+            "seconds": time.time() - t0,
+            "task": tc.partitionId() if tc is not None else -1}])
     return fn
 
 
@@ -143,88 +255,49 @@ def export_index(spark: SparkSession, storage: IndexStorage,
     return dm
 
 
-def compact(spark: SparkSession, storage: IndexStorage) -> None:
-    """Fold tombstones in and refresh stats/bounds.
+def compact(spark: SparkSession, storage: IndexStorage) -> dict:
+    """Fold the tombstones in, one source partition at a time.
 
-    Tombstoned docs are dropped from the packed blocks via a per-shard
-    cogroup (the dead-id set stays distributed — no driver collect, no
-    closure broadcast); fresh per-field avgdl is recomputed from the
-    cleaned field_lens table. Impact bounds need no refill — they are
-    derived live at query time from each block's (max_tf, min_dl)."""
-    import json as _json
+    One Spark job over the tombstones: ``src_part = doc_id >> 33``,
+    ``repartitionById`` puts partition K on task K mod T (as the SPIMI
+    build does), and each group rewrites K's files without its dead
+    docs (``_compact_writer``). Only partitions holding a deleted doc
+    run; the dead-id set travels through the exchange and is never
+    collected on the driver. The driver then runs the build's stats
+    tail (``commit_stats``) over the per-partition partials and deletes
+    the tombstones last.
 
-    from .build import DOC_ID_PART_SHIFT, POSTINGS_SCHEMA
+    Returns the mutation record ``{"parts": [per-partition rows:
+    src_part, docs, tokens, postings, dropped, seconds, task],
+    "dropped": n, "seconds": s}``, built from the job's own output rows
+    (docs/tokens/postings are the partition's counts after the
+    rewrite). Raises
+    ``ValueError`` on an index an earlier release compacted into
+    whole-table files."""
+    t0 = time.time()
+    storage.require_part_layout()
+    if not _has_tombstones(storage):
+        return {"parts": [], "dropped": 0, "seconds": time.time() - t0}
     meta = storage.read_meta()
-    tombs = read_tombstones(spark, storage)
-    if tombs is None:
-        return
-    S = int(meta["num_shards"])
-
-    doc_meta = storage.doc_meta(spark).join(tombs, "doc_id", "left_anti")
-    n_docs = doc_meta.count()
-    field_lens = (storage.field_lens(spark)
-                  .join(tombs, "doc_id", "left_anti"))
-
-    shard_of = F.pmod(F.shiftright("doc_id", DOC_ID_PART_SHIFT),
-                      F.lit(S)).cast("int")
-    tombs_sharded = tombs.withColumn("shard", shard_of)
-    runs_clean = (storage.tf_runs(spark).groupBy("shard")
-                  .cogroup(tombs_sharded.groupBy("shard"))
-                  .applyInPandas(
-                      lambda key, l, r: _drop_docs_cogrouped(
-                          meta["with_positions"])(l, r),
-                      POSTINGS_SCHEMA))
-
-    def swap(df_writer, target):
-        tmp = target + ".compact"
-        df_writer(tmp)
-        storage.io.delete_dir(target)
-        storage.io.move(tmp, target)
-
-    # order matters: materialize everything reading OLD paths first.
-    # LAYOUT v6: runs ARE the postings — one cleaned shard-partitioned
-    # write replaces the old tf_runs spool + re-layout pair
-    swap(lambda d: (runs_clean
-                    .sortWithinPartitions("shard", "term", "first_doc")
-                    .write.mode("overwrite").partitionBy("shard")
-                    .parquet(d)),
-         storage.postings_dir)
-    swap(lambda d: doc_meta.write.mode("overwrite").parquet(d),
-         storage.doc_meta_dir)
-    swap(lambda d: field_lens.write.mode("overwrite").parquet(d),
-         storage.field_lens_dir)
-
-    # fresh per-field stats from the cleaned per-doc lengths
-    fl_rows = (storage.field_lens(spark).groupBy("field")
-               .agg(F.sum("dl").alias("tokens")).collect())
-    field_totals = {r["field"]: int(r["tokens"]) for r in fl_rows}
-    avgdl_by_field = {f: (t / n_docs if n_docs else 0.0)
-                      for f, t in field_totals.items()}
-    avgdl = avgdl_by_field.get("content", 0.0)
-    swap(lambda d: (spark.read.parquet(storage.postings_dir)
-                    .groupBy("term")
-                    .agg(F.sum("doc_count").alias("df"),
-                         F.sum("sum_tf").alias("cf"))
-                    .write.mode("overwrite").parquet(d)),
-         storage.term_stats_dir)
-    # refresh the per-partition partials too (future appends re-agg them)
-    swap(lambda d: spark.read.parquet(storage.term_stats_dir)
-         .write.mode("overwrite").parquet(d),
-         storage.term_stats_parts_dir)
-    # consolidate the per-partition field-stat partials to the
-    # post-delete truth (appends re-read these via _read_field_stats)
-    for name in storage.io.listdir(storage.manifest_dir):
-        if name.startswith("fields_part=") and name.endswith(".json"):
-            storage.io.delete_file(
-                os.path.join(storage.manifest_dir, name))
-    storage.io.write_bytes_atomic(
-        os.path.join(storage.manifest_dir, "fields_part=compacted.json"),
-        _json.dumps({fn: (n_docs, t)
-                     for fn, t in field_totals.items()}).encode())
-
-    meta.update({
-        "n_docs": n_docs, "avgdl": avgdl,
-        "avgdl_by_field": avgdl_by_field,
-    })
-    storage.write_meta(meta)
+    done = storage.completed_partitions()
+    # raw tombstone rows (an id tombstoned twice is deduped in-task)
+    dead = (spark.read.parquet(tombstones_dir(storage)).select(
+        "doc_id",
+        F.shiftright("doc_id", DOC_ID_PART_SHIFT).cast("int")
+        .alias("src_part")))
+    rows = [r.asDict() for r in
+            dead.repartitionById(default_tasks(spark, len(done)),
+                                 "src_part")
+            .groupBy("src_part")
+            .applyInPandas(_compact_writer(storage,
+                                           int(meta["num_shards"]),
+                                           meta["with_positions"]),
+                           _COMPACT_SCHEMA)
+            .collect()]  # tiny: one row per rewritten partition
+    commit_stats(spark, storage, meta,
+                 {**done, **{r["src_part"]: r for r in rows}}.values())
     storage.io.delete_dir(tombstones_dir(storage), missing_ok=True)
+    parts = sorted(rows, key=lambda r: r["src_part"])
+    return {"parts": parts,
+            "dropped": sum(r["dropped"] for r in parts),
+            "seconds": time.time() - t0}

@@ -13,11 +13,23 @@ Layout::
       meta.json            build config: P, num_shards, block_size, k1/b,
                            with_positions, analyzer version, n_docs, avgdl
       manifest/part=K.json per-source-partition checkpoint + lineage
-                           (north_rule resumability)
+                           (docs, tokens, postings; north_rule
+                           resumability) — written LAST, the commit
+      manifest/fields_part=K.json
+                           per-field (docs, tokens) partial of part K
       doc_meta/part=K.parquet
       postings/shard=S/part=K.parquet  SPIMI runs written straight
-                           into the final shard layout (LAYOUT v6)
-      term_stats/*.parquet
+                           into the final shard layout, S = K mod
+                           num_shards (LAYOUT v6)
+      field_lens/part=K.parquet        per-doc per-field lengths
+      term_stats_parts/part=K.parquet  per-partition df/cf partial
+      term_stats/part=all.parquet      global df/cf (sum of the partials)
+      tombstones/*.parquet deleted doc ids, masked at query time until
+                           compact() drops them from their parts
+
+``compact()`` rewrites the ``part=K`` files of each source partition K
+that holds a tombstoned doc in place (same names), so the layout is the
+same after any build, append, delete or compaction.
 """
 from __future__ import annotations
 
@@ -40,7 +52,6 @@ class IndexStorage:
         self.meta_path = os.path.join(index_dir, "meta.json")
         self.manifest_dir = os.path.join(index_dir, "manifest")
         self.doc_meta_dir = os.path.join(index_dir, "doc_meta")
-        self.tf_runs_dir = os.path.join(index_dir, "tf_runs")
         self.postings_dir = os.path.join(index_dir, "postings")
         self.term_stats_dir = os.path.join(index_dir, "term_stats")
         self.term_stats_parts_dir = os.path.join(index_dir,
@@ -59,6 +70,19 @@ class IndexStorage:
 
     def exists(self) -> bool:
         return self.io.exists(self.meta_path)
+
+    def require_part_layout(self) -> None:
+        """Refuse an index whose source partitions an earlier release's
+        compaction merged into whole-table files (marked by its
+        ``fields_part=compacted.json``): its manifests no longer count
+        the live docs, so neither a per-partition compaction nor an
+        append can keep its stats exact."""
+        if self.io.exists(os.path.join(self.manifest_dir,
+                                       "fields_part=compacted.json")):
+            raise ValueError(
+                f"index {self.root} was compacted into whole-table files "
+                "by an earlier release and has no per-partition layout; "
+                "rebuild it to append or compact")
 
     # -- manifest (per-partition checkpoints) --------------------------------
     def manifest_path(self, src_part: int) -> str:
@@ -96,20 +120,8 @@ class IndexStorage:
     def doc_meta(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(os.path.join(self.doc_meta_dir, "*.parquet"))
 
-    def tf_runs(self, spark: SparkSession) -> DataFrame:
-        """LAYOUT v6: SPIMI tasks write the final shard layout
-        directly — the runs ARE the postings (shard from the hive
-        dir). Kept as an alias for the mutation/append paths."""
-        return self.postings(spark)
-
     def postings(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.postings_dir)
 
     def term_stats(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.term_stats_dir)
-
-    def field_lens(self, spark: SparkSession) -> DataFrame:
-        """Per-doc per-field lengths (doc_id, field, dl) — lets
-        ``compact()`` recompute exact per-field avgdl after deletes."""
-        return spark.read.parquet(
-            os.path.join(self.field_lens_dir, "*.parquet"))

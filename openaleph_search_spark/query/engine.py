@@ -170,6 +170,9 @@ class Engine:
             "phrase_bigram_fast_path": phrase_fast,
             "k": sa.k,
             "pruning_eligible": strategy == "topk_scatter_gather",
+            # whether the index layout admits the zero-exchange scatter
+            # plan; False = the legacy cogrouped plan runs instead
+            "scatter": ex.scatter_ok(),
             "post_filter_fields": post_fields,
         }
 

@@ -987,8 +987,10 @@ class SearchExecutor:
     # is a valid evaluation group — per-group top-k unions to a
     # superset of the global top-k, scores are exact per doc (global
     # idf/avgdl live in ctx). The path only engages when the layout
-    # invariant (part=<int>.parquet naming) holds; compacted/rewritten
-    # indexes fall back to the legacy cogrouped plan.
+    # invariant (part=<int>.parquet naming) holds. Builds, appends and
+    # compact() (which rewrites each touched part in place) all keep
+    # it; only an index an earlier release compacted into whole-table
+    # files falls back to the legacy cogrouped plan.
 
     def _scatter_layout(self) -> dict | None:
         if self._scatter is not False:

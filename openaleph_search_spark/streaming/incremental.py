@@ -17,7 +17,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..index.build import _read_field_stats, run_spimi
+from ..index.build import commit_stats, run_spimi
 from ..index.storage import IndexStorage
 
 
@@ -25,8 +25,16 @@ def append_batch(spark: SparkSession, docs: DataFrame, index_dir: str,
                  epoch_id: int) -> None:
     """Index one micro-batch: new src_part namespace per epoch, same
     SPIMI packed-block pipeline (same field/bigram config as the base
-    build, read back from meta), postings appended, stats refreshed."""
+    build, read back from meta), then the build's stats tail over every
+    partition's partials.
+
+    The new partitions' blocks land straight in
+    postings/shard=K/part=<new_part>.parquet: their doc ids sit above
+    the base namespace, so within-(term, shard) doc-range disjointness
+    holds, and impact bounds are computed live at query time from each
+    block's (max_tf, min_dl), so an append never invalidates pruning."""
     storage = IndexStorage(index_dir)
+    storage.require_part_layout()
     meta = storage.read_meta()
     P = meta["num_partitions"]
     S = meta["num_shards"]
@@ -36,34 +44,17 @@ def append_batch(spark: SparkSession, docs: DataFrame, index_dir: str,
         f: f for f in meta.get("fields", []) if f != "content"}
     bigrams = bool(meta.get("bigrams", False))
     meta_cols: list[str] = meta.get("meta_cols") or []
+    done = storage.completed_partitions()
     # epoch partitions live above the base namespace → doc ids unique
-    base_part = (max(storage.completed_partitions(), default=P - 1) + 1)
+    base_part = max(done, default=P - 1) + 1
 
-    run_spimi(storage, docs, P, S, meta["with_positions"], fields, bigrams,
-              meta_cols, base_part=base_part)
-
-    n_docs = storage.doc_meta(spark).count()
-    # per-field avgdl over ALL docs (base + appended) from the
-    # per-partition field-stat partials — the scoring stats
-    avgdl_by_field = _read_field_stats(storage)
-    avgdl = avgdl_by_field.get("content", 0.0)
-
-    # LAYOUT v6: the SPIMI tasks above already wrote the new epoch's
-    # blocks straight into postings/shard=K/part=<new_part>.parquet
-    # (their doc ids sit above the base namespace, so within-
-    # (term,shard) doc-range disjointness holds); impact bounds are
-    # computed live at query time from each block's (max_tf, min_dl),
-    # so an append can never invalidate pruning — no extra write here.
-
-    from ..index.build import aggregate_term_stats
-    aggregate_term_stats(spark, storage)
-
-    meta.update({
-        "n_docs": n_docs, "avgdl": avgdl,
-        "avgdl_by_field": avgdl_by_field,
-        "built_partitions": meta.get("built_partitions", 0) + 1,
-    })
-    storage.write_meta(meta)
+    new_rows = run_spimi(storage, docs, P, S, meta["with_positions"],
+                         fields, bigrams, meta_cols, base_part=base_part)
+    meta["built_partitions"] = meta.get("built_partitions", 0) + 1
+    # N over ALL docs (base + appended, tombstoned ones included until
+    # compact() drops them) from the manifests
+    commit_stats(spark, storage, meta,
+                 [*done.values(), *new_rows])
 
 
 def stream_index(spark: SparkSession, docs_stream: DataFrame,

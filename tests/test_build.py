@@ -39,6 +39,23 @@ def test_deterministic_rebuild(spark, fixture_docs_df, fixture_index,
         tuple(_postings_digest(spark, out))
 
 
+def test_term_stats_row_order_deterministic(spark, fixture_docs_df,
+                                            tmp_path):
+    """Two builds of the same corpus write the same global term_stats
+    file, rows in the same order (the driver merge is single-threaded
+    over the name-sorted per-partition partials)."""
+    import pyarrow.parquet as pq
+    tables = []
+    for name in ("ts_a", "ts_b"):
+        out = str(tmp_path / name)
+        build_index(spark, fixture_docs_df, out, num_partitions=8,
+                    num_shards=2, bigrams=True)
+        tables.append(pq.read_table(
+            os.path.join(out, "term_stats", "part=all.parquet")))
+    assert tables[0].num_rows > 50
+    assert tables[0].equals(tables[1])
+
+
 def test_resume_from_checkpoint(spark, fixture_docs_df, fixture_index,
                                 tmp_path):
     """Kill after a subset of partitions → resumed build byte-identical."""

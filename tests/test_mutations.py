@@ -425,3 +425,342 @@ def test_streaming_dedup_stateful(spark, tmp_path):
         assert flags.count(False) == 1
     # 'same text' appears 3x -> 2 dups; total dups = 3
     assert sum(r["is_duplicate"] for r in rows) == 3
+
+
+# -- per-source-partition compaction -----------------------------------------
+
+_WORDS = ["alpha", "beta", "gamma", "delta", "omega", "sigma", "kappa"]
+
+
+def _synthetic_rows(n: int, start: int = 0) -> list[tuple]:
+    """Docs with terms frequent enough to span several 128-doc blocks
+    per partition (``common``), positional phrases and a lang facet."""
+    rows = []
+    for i in range(start, start + n):
+        text = (f"{_WORDS[i % 7]} {_WORDS[(3 * i) % 7]} common w{i % 13} "
+                f"{_WORDS[(5 * i + 1) % 7]}"
+                + (" common shared" if i % 3 == 0 else " rare"))
+        rows.append((f"r{i % 3}", f"d/f{i}.txt", "c1",
+                     ("py", "go", "txt")[i % 4 % 3], text))
+    return rows
+
+
+_DOCS_SCHEMA = ("repo string, path string, commit string, lang string, "
+                "content string")
+
+_COMPARE_QUERIES = [
+    {"q": "common"},                              # term
+    {"q": '"alpha beta"'},                        # phrase (bigram path)
+    {"q": '"alpha alpha common"'},                # phrase (positions)
+    {"q": "w1*"},                                 # prefix
+    {"q": "common OR rare", "filter:lang": "py"},  # filtered
+    {"q": "shared AND gamma"},
+]
+
+
+def _results(eng, q: dict) -> list[tuple]:
+    return [(r["path"], r["score"])
+            for r in eng.search({**q, "limit": 1000}).hit_rows(0, 1000)]
+
+
+def _assert_same_hits(got: list, want: list, ordered: bool, what):
+    if not ordered:  # doc-id tie order differs between layouts
+        got = sorted(got, key=lambda h: (-round(h[1], 9), h[0]))
+        want = sorted(want, key=lambda h: (-round(h[1], 9), h[0]))
+    assert [p for p, _ in got] == [p for p, _ in want], what
+    for (_, a), (_, b) in zip(got, want):
+        assert abs(a - b) <= 1e-9, what
+
+
+def _assert_same_answers(e_got, e_want, ordered: bool = True):
+    for q in _COMPARE_QUERIES:
+        _assert_same_hits(_results(e_got, q), _results(e_want, q),
+                          ordered, q)
+        assert e_got.count(q) == e_want.count(q), q
+    facet = {"q": "common", "facet": "lang", "limit": 0}
+    got, want = (
+        {r["value"]: r["count"]
+         for r in e.search(facet).facets["lang"].collect()}
+        for e in (e_got, e_want))
+    assert got == want and got
+
+
+def _part_files(root: str) -> dict[str, list[str]]:
+    out = {}
+    for d in ("doc_meta", "postings", "field_lens", "term_stats_parts"):
+        out[d] = [os.path.join(dp, n)
+                  for dp, _, ns in os.walk(os.path.join(root, d))
+                  for n in ns]
+    return out
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_compact_rewrites_parts_in_place(spark, tmp_path):
+    """A compacted index keeps the build layout — every file still
+    ``part=<int>.parquet``, the zero-exchange scatter plan still runs —
+    answers equal a fresh build over the survivors, and partitions
+    without a deleted doc are not rewritten."""
+    import re
+    rows = _synthetic_rows(400)
+    docs = spark.createDataFrame(rows, _DOCS_SCHEMA)
+    comp, fresh = str(tmp_path / "comp"), str(tmp_path / "fresh")
+    build_index(spark, docs, comp, num_partitions=3, num_shards=2,
+                bigrams=True)
+    st = IndexStorage(comp)
+    dm = {r["path"]: (r["doc_id"], r["src_part"])
+          for r in st.doc_meta(spark).collect()}
+    # every 4th doc of partitions 0 and 1; partition 2 untouched
+    victims = sorted(p for p, (_, sp) in dm.items() if sp < 2)[::4]
+    assert delete_by_ids(spark, st, [dm[p][0] for p in victims]) == \
+        len(victims)
+    untouched = [os.path.join(dp, n)
+                 for dp, _, ns in os.walk(comp) for n in ns
+                 if re.search(r"part=2\.(parquet|json)$", n)]
+    assert len(untouched) == 6
+    mtimes = {p: os.stat(p).st_mtime_ns for p in untouched}
+
+    rec = compact(spark, st)
+
+    assert [p["src_part"] for p in rec["parts"]] == [0, 1]
+    assert rec["dropped"] == len(victims) == \
+        sum(p["dropped"] for p in rec["parts"])
+    assert rec["seconds"] > 0
+    assert {p: os.stat(p).st_mtime_ns for p in untouched} == mtimes
+    assert read_tombstones(spark, st) is None
+    for d, files in _part_files(comp).items():
+        assert files, d
+        for f in files:
+            assert re.fullmatch(r"part=\d+\.parquet",
+                                os.path.basename(f)), f
+    assert not any(n.startswith("fields_part=") and "compacted" in n
+                   for n in os.listdir(st.manifest_dir))
+
+    survivors = [r for r in rows if r[1] not in set(victims)]
+    build_index(spark, spark.createDataFrame(survivors, _DOCS_SCHEMA),
+                fresh, num_partitions=3, num_shards=2, bigrams=True)
+    e_c, e_f = Engine(spark, comp), Engine(spark, fresh)
+    assert e_c.executor.scatter_ok()
+    assert e_c.explain({"q": "common", "limit": 5})["scatter"]
+    plan = _plan(e_c.search({"q": "common", "limit": 5}).hits)
+    assert "MapInPandas" in plan and "Exchange" not in plan
+    _assert_same_answers(e_c, e_f)
+    m_c, m_f = st.read_meta(), IndexStorage(fresh).read_meta()
+    assert m_c["n_docs"] == m_f["n_docs"] == len(survivors)
+    for f, a in m_f["avgdl_by_field"].items():
+        assert abs(m_c["avgdl_by_field"][f] - a) < 1e-9, f
+    # the rewritten partials equal the fresh build's
+    for k in (0, 1):
+        got = st.io.read_parquet(os.path.join(
+            st.term_stats_parts_dir, f"part={k}.parquet"))
+        want = IndexStorage(fresh).io.read_parquet(os.path.join(
+            fresh, "term_stats_parts", f"part={k}.parquet"))
+        assert got.equals(want), k
+
+
+def test_compact_append_chain_matches_fresh_build(spark, tmp_path):
+    """build → delete → compact → append → delete → compact equals a
+    fresh build of the live docs on N, avgdl_by_field, df and hits."""
+    from openaleph_search_spark.streaming.incremental import append_batch
+    base, batch = _synthetic_rows(240), _synthetic_rows(80, start=240)
+    idx, fresh = str(tmp_path / "chain"), str(tmp_path / "chain_fresh")
+    build_index(spark, spark.createDataFrame(base, _DOCS_SCHEMA), idx,
+                num_partitions=3, num_shards=2, bigrams=True)
+    st = IndexStorage(idx)
+    gone = {f"d/f{i}.txt" for i in range(0, 240, 7)}
+    delete_docs(spark, st, F.col("path").isin(sorted(gone)))
+    compact(spark, st)
+    append_batch(spark, spark.createDataFrame(batch, _DOCS_SCHEMA), idx,
+                 epoch_id=0)
+    gone2 = {f"d/f{i}.txt" for i in range(1, 320, 9)} - gone
+    assert delete_docs(spark, st, F.col("path").isin(sorted(gone2))) == \
+        len(gone2)
+    rec = compact(spark, st)
+    assert rec["dropped"] == len(gone2)
+    # the second compaction touched base and appended partitions
+    assert max(p["src_part"] for p in rec["parts"]) >= 3
+    assert min(p["src_part"] for p in rec["parts"]) < 3
+
+    live = [r for r in base + batch if r[1] not in gone | gone2]
+    build_index(spark, spark.createDataFrame(live, _DOCS_SCHEMA), fresh,
+                num_partitions=3, num_shards=2, bigrams=True)
+    m_c, m_f = st.read_meta(), IndexStorage(fresh).read_meta()
+    assert m_c["n_docs"] == m_f["n_docs"] == len(live)
+    assert m_c["avgdl_by_field"].keys() == m_f["avgdl_by_field"].keys()
+    for f, a in m_f["avgdl_by_field"].items():
+        assert abs(m_c["avgdl_by_field"][f] - a) < 1e-9, f
+    df_c, df_f = ({r["term"]: (r["df"], r["cf"])
+                   for r in s.term_stats(spark).collect()}
+                  for s in (st, IndexStorage(fresh)))
+    assert df_c == df_f
+    e_c, e_f = Engine(spark, idx), Engine(spark, fresh)
+    assert e_c.executor.scatter_ok()
+    _assert_same_answers(e_c, e_f, ordered=False)
+
+
+def test_compact_deleting_whole_partitions(spark, tmp_path):
+    """Deleting every doc of one partition, then every doc of the
+    index: compaction leaves empty part files of the same schema,
+    count 0, and queries that still run."""
+    import pyarrow.parquet as pq
+    rows = _synthetic_rows(60)
+    idx = str(tmp_path / "empty_parts")
+    build_index(spark, spark.createDataFrame(rows, _DOCS_SCHEMA), idx,
+                num_partitions=3, num_shards=2, bigrams=True)
+    st = IndexStorage(idx)
+
+    def schemas(k):
+        return [pq.read_schema(f) for fs in _part_files(idx).values()
+                for f in fs if f.endswith(f"part={k}.parquet")]
+    before = schemas(1)
+    assert len(before) == 4
+    eng0 = Engine(spark, idx)
+    n1 = eng0.count({"q": "common"})
+    delete_docs(spark, st, F.col("src_part") == 1)
+    rec = compact(spark, st)
+    assert [p["src_part"] for p in rec["parts"]] == [1]
+    assert rec["parts"][0]["docs"] == 0
+    after = schemas(1)
+    assert [s.remove_metadata() for s in after] == \
+        [s.remove_metadata() for s in before]
+    assert all(pq.read_metadata(f).num_rows == 0
+               for fs in _part_files(idx).values() for f in fs
+               if f.endswith("part=1.parquet"))
+    eng = Engine(spark, idx)
+    assert eng.executor.scatter_ok()
+    assert 0 < eng.count({"q": "common"}) < n1
+    assert st.completed_partitions()[1]["docs"] == 0
+
+    delete_docs(spark, st, F.lit(True))
+    compact(spark, st)
+    meta = st.read_meta()
+    assert meta["n_docs"] == 0
+    assert all(v == 0.0 for v in meta["avgdl_by_field"].values())
+    assert st.term_stats(spark).count() == 0
+    eng = Engine(spark, idx)
+    assert eng.count({"q": "common"}) == 0
+    assert eng.search({"q": "common OR alpha", "limit": 5}).hit_rows() \
+        == []
+    assert eng.search({"limit": 5}, with_total=True).total == 0
+    facets = eng.search({"q": "common", "facet": "lang", "limit": 0})
+    assert facets.facets["lang"].collect() == []
+
+
+def test_compact_rerun_after_crash_converges(spark, tmp_path):
+    """A crash after some partitions were rewritten (tombstones, global
+    stats and meta still the old ones) leaves a correct index, and
+    re-running compact() ends with the same files as an uninterrupted
+    compaction."""
+    import json as _json
+    import shutil
+    rows = _synthetic_rows(200)
+    ref, crashed = str(tmp_path / "ref"), str(tmp_path / "crashed")
+    build_index(spark, spark.createDataFrame(rows, _DOCS_SCHEMA), ref,
+                num_partitions=3, num_shards=2, bigrams=True)
+    delete_docs(spark, IndexStorage(ref),
+                F.col("path").isin([f"d/f{i}.txt"
+                                    for i in range(0, 200, 5)]))
+    shutil.copytree(ref, crashed)
+    pre = {_json.dumps(q): _results(Engine(spark, ref), q)
+           for q in _COMPARE_QUERIES}
+    rec = compact(spark, IndexStorage(ref))
+    assert len(rec["parts"]) == 3
+
+    # the crash: partition 0 fully rewritten, nothing else
+    for d, files in _part_files(ref).items():
+        for f in files:
+            if f.endswith("part=0.parquet"):
+                shutil.copy2(f, f.replace(ref, crashed, 1))
+    for n in ("part=0.json", "fields_part=0.json"):
+        shutil.copy2(os.path.join(ref, "manifest", n),
+                     os.path.join(crashed, "manifest", n))
+    e_crashed = Engine(spark, crashed)
+    for q in _COMPARE_QUERIES:
+        _assert_same_hits(_results(e_crashed, q), pre[_json.dumps(q)],
+                          True, q)
+
+    rec2 = compact(spark, IndexStorage(crashed))
+    assert rec2["parts"][0]["dropped"] == 0
+    assert rec2["dropped"] == rec["dropped"] - rec["parts"][0]["dropped"]
+    import pyarrow.parquet as pq
+
+    def snapshot(root):
+        out = {}
+        for dp, _, ns in os.walk(root):
+            for n in ns:
+                rel = os.path.relpath(os.path.join(dp, n), root)
+                p = os.path.join(dp, n)
+                out[rel] = (pq.read_table(p) if n.endswith(".parquet")
+                            else _json.loads(open(p).read()))
+        return out
+    a, b = snapshot(ref), snapshot(crashed)
+    assert a.keys() == b.keys()
+    for rel in a:
+        if rel.endswith(".parquet"):
+            assert a[rel].equals(b[rel]), rel
+        else:
+            assert a[rel] == b[rel], rel
+    _assert_same_answers(Engine(spark, crashed), Engine(spark, ref))
+
+
+def test_explain_reports_scatter_and_old_compacted_index_refused(
+        spark, fixture_docs_df, tmp_path):
+    """explain()["scatter"] says which plan runs: True on a fresh and on
+    a compacted index, False on an index an earlier release compacted
+    into whole-table files — which compact() and append refuse."""
+    from openaleph_search_spark.streaming.incremental import append_batch
+    idx = str(tmp_path / "idx_explain")
+    build_index(spark, fixture_docs_df, idx, num_partitions=4,
+                num_shards=2)
+    q = {"q": "banana", "limit": 5}
+    assert Engine(spark, idx).explain(q)["scatter"] is True
+    st = IndexStorage(idx)
+    delete_docs(spark, st, F.col("lang") == "go")
+    compact(spark, st)
+    assert Engine(spark, idx).explain(q)["scatter"] is True
+
+    # the earlier whole-table layout: Spark-named doc_meta files and a
+    # consolidated field-stat partial
+    import shutil
+    whole = str(tmp_path / "doc_meta_whole")
+    st.doc_meta(spark).write.parquet(whole)
+    shutil.rmtree(st.doc_meta_dir)
+    shutil.move(whole, st.doc_meta_dir)
+    dm = st.doc_meta(spark)
+    with open(os.path.join(st.manifest_dir,
+                           "fields_part=compacted.json"), "w") as f:
+        f.write("{}")
+    e_old = Engine(spark, idx)
+    assert e_old.explain(q)["scatter"] is False
+    assert e_old.count({"q": "banana"}) == 1  # the legacy plan runs
+    delete_by_ids(spark, st, [int(dm.first()["doc_id"])])
+    with pytest.raises(ValueError, match=idx):
+        compact(spark, st)
+    with pytest.raises(ValueError, match=idx):
+        append_batch(spark, fixture_docs_df.limit(1), idx, epoch_id=0)
+
+
+def test_cli_compact_prints_record(spark, fixture_docs_df, tmp_path):
+    """``cli compact`` prints meta.json's keys plus the compaction
+    record under ``compaction``."""
+    import io
+    import json as _json
+    from contextlib import redirect_stdout
+    from openaleph_search_spark import cli
+    idx = str(tmp_path / "cli_rec")
+    build_index(spark, fixture_docs_df, idx, num_partitions=4,
+                num_shards=2)
+    st = IndexStorage(idx)
+    delete_docs(spark, st, F.col("repo") == "r3")
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        assert cli.main(["compact", "--index", idx]) == 0
+    out = _json.loads(buf.getvalue().strip().splitlines()[-1])
+    assert out["n_docs"] == 8
+    rec = out["compaction"]
+    assert rec["dropped"] == 2 and rec["seconds"] > 0
+    assert sum(p["dropped"] for p in rec["parts"]) == 2
+    assert {p["src_part"] for p in rec["parts"]} <= \
+        set(st.completed_partitions())
